@@ -56,9 +56,9 @@ __all__ = [
 # dominated the local line (the basket self-join alone is ~2/3 of
 # graph_triangle_count's 8.5 s at sf0.1) while telling us nothing new
 # about the operators themselves. Each relation is now staged to
-# parquet ONCE per (sf_dir, source-file identity) with the tmp +
-# atomic-rename discipline merge_into_parquet uses — first writer
-# wins, losers discard their private tmp dir — and every query reads
+# parquet ONCE per (sf_dir, source-file identity), written to a private
+# tmp dir and renamed into place — first writer wins, losers discard
+# their private tmp dir — and every query reads
 # the staged copy. Correctness is untouched (the staged rows are
 # byte-identical to the inline build; every oracle hash is unchanged)
 # and the staging cost itself still shows up exactly once in any cold

@@ -6,19 +6,30 @@ processed_timestamp`` (`lambda_function.py:226-235`). The Spark-native
 equivalent is a set-based MERGE: with Delta/Iceberg on the cluster
 that's ``MERGE INTO`` (one shuffle, ACID); this environment has no
 lakehouse jars, so ``merge_upsert`` implements the same semantics as a
-pure DataFrame plan (full outer join on the key + coalesce), and
-``merge_into_parquet`` wraps it as a read-merge-rewrite sink. Replay
-of the same batch is idempotent — verified in tests/test_upsert.py.
+pure DataFrame plan (full outer join on the key + per-column choice).
+
+``merge_into_parquet`` is the per-batch sink over a parquet directory.
+When the batch has the target's columns (names and types), a MERGE
+that updates every non-key column replaces whole rows, and
+``upsert_rows`` plans it as a left-anti join on the batch's keys plus a
+union: the target is scanned once and never shuffled. Any other schema
+takes ``merge_upsert``. The merged rows are written to ``<path>.next``
+and renamed into place (``swap_parquet``), so a failed write leaves the
+previous target intact. Replay of the same batch is idempotent —
+verified in tests/test_upsert.py.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import re
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
@@ -67,21 +78,21 @@ def merge_upsert(
     update_cols = update_cols or tuple(c for c in source.columns if c != key)
     if best_effort:
         source = _dedup_last_writer(source.filter(F.col(key).isNotNull()), key)
-    t = target.alias("t")
-    s = source.alias("s")
+    # Side markers, not the key, tell which side a joined row came
+    # from: a target row with a NULL key matches nothing and must keep
+    # its own values.
+    t = target.withColumn("__in_t", F.lit(True)).alias("t")
+    s = source.withColumn("__in_s", F.lit(True)).alias("s")
     joined = t.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer")
-    inserted = F.col(f"t.{key}").isNull()
-    matched = F.col(f"s.{key}").isNotNull() & F.col(f"t.{key}").isNotNull()
+    in_source = F.col("s.__in_s").isNotNull()
+    inserted = F.col("t.__in_t").isNull()
     out_cols = []
     for c in cols:
         if c == key:
             out_cols.append(F.coalesce(F.col(f"t.{key}"), F.col(f"s.{key}")).alias(key))
         elif c in source.columns:
             sc, tc = F.col(f"s.{c}"), F.col(f"t.{c}")
-            if c in update_cols:
-                expr = F.when(inserted | matched, sc).otherwise(tc)
-            else:
-                expr = F.when(inserted, sc).otherwise(tc)
+            expr = F.when(in_source if c in update_cols else inserted, sc).otherwise(tc)
             out_cols.append(expr.alias(c))
         else:
             out_cols.append(F.col(f"t.{c}").alias(c))
@@ -105,18 +116,86 @@ def _dedup_last_writer(source: DataFrame, key: str) -> DataFrame:
     )
 
 
-def merge_into_parquet(source: DataFrame, path: str, key: str) -> None:
-    """Best-effort MERGE sink over a parquet directory: read existing
-    target if present, merge, rewrite atomically-ish (tmp + rename at
-    the FS layer is left to the deployment; local mode overwrites)."""
-    spark = source.sparkSession
+def _column_types(df: DataFrame) -> dict[str, str]:
+    """Column name -> type, nullability left out (``simpleString``
+    omits it at every nesting level)."""
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def upsert_rows(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
+    """``merge_upsert(target, source, key)`` with its default policy
+    (every non-key source column updated), planned without a full outer
+    join when it can be.
+
+    If both sides have the same column names and types (nullability
+    ignored), a matched source row replaces its target row whole, so
+    the MERGE is the target rows whose key the source lacks plus every
+    source row: a left-anti join on the source's keys, then a union.
+    That holds for NULL keys (a NULL never matches, so the row is kept
+    on either side) and for explicit NULL update values. No broadcast
+    hint: the planner broadcasts the keys below the session's
+    ``autoBroadcastJoinThreshold``, leaving the target scan unshuffled,
+    and falls back to a sort-merge anti-join above it. Any other schema
+    (an extra column on either side, a widened type) takes
+    ``merge_upsert``."""
+    if _column_types(target) != _column_types(source):
+        return merge_upsert(target, source, key)
+    return target.join(source.select(key), key, "left_anti").unionByName(source)
+
+
+def recover_parquet(path: str) -> None:
+    """Finish a ``swap_parquet`` that stopped between its two renames:
+    if ``path`` is missing, adopt the newest ``path.old*``, which holds
+    the last complete version of the target."""
+    if not os.path.exists(path):
+        olds = sorted(glob.glob(glob.escape(path) + ".old*"), key=os.path.getmtime)
+        if olds:
+            os.rename(olds[-1], path)
+
+
+def swap_parquet(df: DataFrame, path: str) -> None:
+    """Replace the parquet directory ``path`` with ``df``: write
+    ``path.next``, rename ``path`` to ``path.old``, rename ``path.next``
+    to ``path``, remove ``path.old``.
+
+    ``df`` may read ``path``: it is fully written before ``path``
+    moves. A write that fails leaves ``path`` as it was. A crash
+    between the renames leaves the previous target in ``path.old``;
+    callers run ``recover_parquet(path)`` before reading the target."""
+    tmp, old = path + ".next", path + ".old"
+    df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
-        target = spark.read.parquet(path)
-        merged = merge_upsert(target, source, key)
+        shutil.rmtree(old, ignore_errors=True)  # left by a crash after the renames
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def merge_into_parquet(
+    source: DataFrame, path: str, key: str, schema: StructType | None = None
+) -> StructType:
+    """MERGE sink over a parquet directory: each source row replaces
+    the target row with its key or is inserted, target rows whose key
+    the source lacks are kept. The first call writes ``source`` as the
+    target.
+
+    The merge is ``upsert_rows``, coalesced to the target's file count
+    so the number of files stays constant; the write goes through
+    ``swap_parquet``. Returns the schema it wrote. Passing that back as
+    ``schema`` on the next call reads the target with it instead of
+    inferring it from the files, which costs a Spark job; it is only
+    valid while nothing but this sink writes ``path``."""
+    spark = source.sparkSession
+    recover_parquet(path)
+    if os.path.exists(path):
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        target = reader.parquet(path)
+        files = sum(1 for f in os.listdir(path) if f.startswith("part-"))
+        merged = upsert_rows(target, source, key).coalesce(max(files, 1))
     else:
         merged = source
-    # Materialize before overwrite (source may read from `path`).
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    swap_parquet(merged, path)
+    return merged.schema
 
 
 def merge_into_delta(

@@ -47,14 +47,6 @@ def run_pipeline_available_now(
     stream = read_transaction_stream(spark, in_path)
     transformed = transform_transactions(stream)
 
-    def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if upsert_path is not None:
-            from ..operators.upsert import merge_into_parquet
-
-            merge_into_parquet(batch_df, upsert_path, key="transaction_id")
-        if json_out is not None:
-            batch_df.write.mode("append").json(f"{json_out}/epoch={epoch_id}")
-
     writer = transformed.writeStream.trigger(availableNow=True)
     if json_out is None and upsert_path is None:
         # test/smoke mode: land micro-batches in an in-memory table
@@ -64,7 +56,41 @@ def run_pipeline_available_now(
             .outputMode("append")
             .start()
         )
-    return writer.foreachBatch(sink_batch).outputMode("update").start()
+    return (
+        writer.foreachBatch(_ingest_sink_batch_fn(json_out, upsert_path))
+        .outputMode("update")
+        .start()
+    )
+
+
+def _ingest_sink_batch_fn(json_out: str | None, upsert_path: str | None):
+    """foreachBatch body of :func:`run_pipeline_available_now`: MERGE
+    the batch into the parquet target keyed on ``transaction_id`` and
+    write it as JSON to ``epoch=<id>``. Idempotent under foreachBatch's
+    at-least-once re-delivery: the JSON side overwrites its own epoch
+    directory and a re-merged batch replaces its own rows.
+
+    The batch is not persisted; each sink re-reads it (the upsert's key
+    scan, its union, the JSON write). ``processed_timestamp`` (R7) is
+    still one value per batch: Structured Streaming fixes
+    ``current_timestamp`` to the batch's timestamp. The target schema
+    from the sink's last write is carried across batches, so the target
+    is read without inference after the first batch of a stream.
+    Module-level so tests can re-deliver a batch directly."""
+    from ..operators.upsert import merge_into_parquet
+
+    schema = None
+
+    def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal schema
+        if upsert_path is not None:
+            schema = merge_into_parquet(
+                batch_df, upsert_path, key="transaction_id", schema=schema
+            )
+        if json_out is not None:
+            batch_df.write.mode("overwrite").json(f"{json_out}/epoch={epoch_id}")
+
+    return sink_batch
 
 
 from ..registry import query
@@ -460,36 +486,27 @@ def _keyed_merge_batch_fn(target_dir: str, normalize_fn):
     """foreachBatch body: MERGE a micro-batch's per-key winner rows
     into the parquet target (``normalize_fn`` reduces the raw batch to
     normalized per-key winners carrying ``user_id``/``last_ts``/
-    ``event_id`` -> full-outer merge with the running target -> atomic
-    swap). Keeping the later of (existing, incoming) per key is
-    associative AND idempotent: the final state is independent of the
+    ``event_id`` -> union with the running target, re-reduced per key
+    -> ``swap_parquet``). Keeping the later of (existing, incoming) per
+    key is associative AND idempotent: the final state is independent of the
     batch split, and re-delivering the same batch (Structured
     Streaming's at-least-once foreachBatch contract) merges identical
     winners to an identical target. The winner row may carry extra
     payload columns (e.g. a CDC ``op`` tombstone marker) — they ride
     along untouched."""
     import os
-    import shutil
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    def merge_batch(batch_df, batch_id: int) -> None:
-        import glob
+    from ..operators.upsert import recover_parquet, swap_parquet
 
+    def merge_batch(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
         incoming = normalize_fn(batch_df)
-        # Crash recovery for the two-step swap below (round-6 advice):
-        # rename(target, old) -> rename(tmp, target) is NOT atomic — a
-        # crash between the renames leaves the accumulated state only
-        # in .old{id}, and the _SUCCESS probe would then silently
-        # restart the upsert target from the incoming batch alone.
-        # If the target is missing but an .old generation exists,
-        # adopt the newest one before probing.
-        if not os.path.exists(target_dir):
-            olds = sorted(glob.glob(target_dir + ".old*"), key=os.path.getmtime)
-            if olds:
-                os.rename(olds[-1], target_dir)
+        # Without the recovery, a crash between the swap's renames would
+        # make the _SUCCESS probe restart the target from this batch.
+        recover_parquet(target_dir)
         if os.path.exists(os.path.join(target_dir, "_SUCCESS")):
             tgt = s.read.parquet(target_dir)
             # union the two winner sets and re-reduce — associative, so
@@ -509,13 +526,7 @@ def _keyed_merge_batch_fn(target_dir: str, normalize_fn):
             )
         else:
             merged = incoming
-        tmp = target_dir + f".next{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_dir + f".old{batch_id}"
-        if os.path.exists(target_dir):
-            os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_parquet(merged, target_dir)
 
     return merge_batch
 
@@ -532,8 +543,8 @@ QUALIFY row_number() OVER (PARTITION BY user_id
 def stream_exec_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming-CDC materialization: the replayed event stream
     drives ``foreachBatch``, and every micro-batch MERGEs its per-key
-    latest rows into a parquet target table (reduce batch -> full-outer
-    merge with the running target -> atomic swap) — the
+    latest rows into a parquet target table (reduce batch -> union with
+    the running target, re-reduced per key -> tmp + rename swap) — the
     readStream → foreachBatch → upsert-sink pipeline the reference's
     Redshift loader approximates (`lambda_function.py:176-271`),
     executed incrementally.
@@ -614,11 +625,11 @@ def stream_exec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged_marker = os.path.join(stage_dir, "_STAGED_WITH_DUPES")
     if not os.path.exists(staged_marker):
         # Stage into a UNIQUE temp dir, then atomically rename into
-        # place (the tmp+rename discipline merge_into_parquet uses):
-        # two sessions hitting the same sf_dir concurrently each build
-        # a complete private stage, and whichever rename wins leaves a
-        # fully-staged directory — never an interleaved rmtree/write
-        # corrupting a stage the other session is mid-way through.
+        # place: two sessions hitting the same sf_dir concurrently each
+        # build a complete private stage, and whichever rename wins
+        # leaves a fully-staged directory — never an interleaved
+        # rmtree/write corrupting a stage the other session is mid-way
+        # through.
         import uuid as _uuid
 
         tmp_dir = f"{stage_dir}.tmp.{_uuid.uuid4().hex[:8]}"

@@ -285,3 +285,63 @@ def test_stream_asof_watermarked_drop_set_is_exact(spark, sf_dir):
     assert got_set == exp_set, (
         f"{len(got_set - exp_set)} extra, {len(exp_set - got_set)} missing"
     )
+
+
+def test_ingest_sink_redelivery_is_idempotent(spark, tmp_path):
+    """Re-delivering an epoch through run_pipeline_available_now's
+    foreachBatch body leaves both the JSON sink and the upsert target
+    unchanged: the JSON side overwrites its epoch directory, and the
+    merge replaces the batch's own rows."""
+    from aws_etl_pipeline_spark.operators.etl import transform_transactions
+    from aws_etl_pipeline_spark.streaming.ingest import _ingest_sink_batch_fn
+
+    json_dir, target = str(tmp_path / "json"), str(tmp_path / "target")
+    sink = _ingest_sink_batch_fn(json_dir, target)
+    # a re-delivered streaming batch keeps its batch timestamp; a static
+    # frame would restamp current_timestamp on every action
+    batch = transform_transactions(
+        generate_transactions(spark, 30, dt.date(2024, 3, 14), seed=4),
+        stamp_processing_time=False,
+    ).withColumn("processed_timestamp", F.lit(dt.datetime(2024, 3, 14, 12, 0)))
+
+    def snapshot():
+        return (
+            sorted(map(tuple, spark.read.json(json_dir).collect())),
+            sorted(map(tuple, spark.read.parquet(target).collect())),
+        )
+
+    sink(batch, 0)
+    first = snapshot()
+    assert len(first[0]) == len(first[1]) == 30
+    sink(batch, 0)
+    assert snapshot() == first
+
+
+def test_ingest_sinks_share_batch_processed_timestamp(spark, tmp_path):
+    """R7 across recomputation: the ingest sink evaluates each batch
+    more than once (the merge's key scan, its union, the JSON write),
+    yet the JSON rows and the target rows of one micro-batch carry one
+    processed_timestamp, the batch's."""
+    in_dir, json_dir = str(tmp_path / "raw"), str(tmp_path / "json")
+    target = str(tmp_path / "target")
+    # the second file re-sends ten ids of the first: the target keeps
+    # the later batch's rows, stamps included
+    for n, seed in ((40, 5), (10, 6)):
+        generate_transactions(spark, n, dt.date(2024, 3, 14), seed=seed).coalesce(
+            1
+        ).write.mode("append").option("header", True).csv(in_dir)
+    q = run_pipeline_available_now(spark, in_dir, json_out=json_dir, upsert_path=target)
+    q.awaitTermination(120)
+    js = spark.read.schema(
+        "transaction_id string, processed_timestamp timestamp, epoch int"
+    ).json(json_dir)
+    per_epoch = js.groupBy("epoch").agg(
+        F.countDistinct("processed_timestamp").alias("stamps")
+    )
+    assert [r.stamps for r in per_epoch.collect()] == [1, 1]
+    latest = js.groupBy("transaction_id").agg(
+        F.max_by("processed_timestamp", "epoch").alias("processed_timestamp")
+    )
+    tgt = spark.read.parquet(target).select("transaction_id", "processed_timestamp")
+    assert tgt.count() == 40
+    assert tgt.join(latest, ["transaction_id", "processed_timestamp"]).count() == 40
