@@ -217,8 +217,12 @@ def _scan_ancestors(node, chain=()):
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
         return _scan_ancestors(node.executedPlan(), chain)
-    if name.startswith("Scan parquet") and "/target" in node.toString():
-        return [list(chain)]
+    # match on the relation's root path: the printed Location is cut at
+    # spark.sql.maxMetadataStringLength, so a long tmp dir hides its tail
+    if name.startswith("Scan parquet"):
+        if node.relation().location().rootPaths().head().getName() == "target":
+            return [list(chain)]
+        return []
     kids = node.children()
     found = []
     for i in range(kids.size()):
